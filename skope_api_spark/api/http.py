@@ -67,6 +67,8 @@ def handle_timeseries_v1(
         return 422, {"detail": json.loads(ex.json())}
     try:
         return 200, service.execute_v1(req)
+    except ValidationError as ex:  # the v2 request built from it (reversed range)
+        return 422, {"detail": json.loads(ex.json())}
     except UNPROCESSABLE as ex:
         return 422, {"detail": [{"msg": str(ex), "type": type(ex).__name__}]}
     except TimeseriesTimeoutError as ex:

@@ -71,23 +71,20 @@ class OptionalTimeRangeModel(BaseModel):
     def _loose(cls, v):
         return _coerce_loose_date(v)
 
-
-class TimeRangeModel(BaseModel):
-    gte: date
-    lte: date
-
-    @field_validator("gte", "lte", mode="before")
-    @classmethod
-    def _loose(cls, v):
-        return _coerce_loose_date(v)
-
     @field_validator("lte")
     @classmethod
     def _ordered(cls, v, info):
+        """A reversed range is a 422; an open end is checked against the
+        dataset span later, at planning."""
         gte = info.data.get("gte")
-        if gte is not None and v < gte:
+        if v is not None and gte is not None and v < gte:
             raise ValueError("time_range.gte must be <= lte")
         return v
+
+
+class TimeRangeModel(OptionalTimeRangeModel):
+    gte: date
+    lte: date
 
 
 class NoSmoother(BaseModel):

@@ -10,7 +10,14 @@ reference ``timeseries.py:402-415``), per-series window expressions unioned
 with a ``series_name`` column, ONE collect under a cancellable job group
 (cooperative timeout — reference's anyio ``fail_after`` → 504 becomes
 ``TimeseriesTimeoutError``; the Spark jobs are actually cancelled, not
-orphaned).
+orphaned). One deadline covers the whole request: the clock starts at
+entry and every collect gets what is left of the budget. The cached base
+is released however the request ends.
+
+Fixed per-request cost: the selection mask is a local relation
+(``geometry.mask_df``), so broadcasting it starts no job, and it is built
+once per request and shared by every slice the request reads; rows are
+collected unsorted and ordered per series on the driver.
 
 Known divergence from the reference (documented in SURVEY.md §2.5 W7): the
 reference hard-codes an annual PeriodIndex (``freq="A"``,
@@ -23,7 +30,9 @@ from __future__ import annotations
 
 import math
 import threading
+import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +48,7 @@ from skope_api_spark.geometry import (
     select_cells,
 )
 from skope_api_spark.operators import windows as wops
+from skope_api_spark.operators.batch import batch_mask_df
 from skope_api_spark.operators.zonal import zonal_series
 from skope_api_spark.plans.catalog import Catalog, DatasetMeta
 from skope_api_spark.plans.intervals import (
@@ -49,6 +59,7 @@ from skope_api_spark.plans.intervals import (
     extraction_band_range,
     normalize_time_range,
 )
+from skope_api_spark.session import local_frame
 from skope_api_spark.sources.cube import analytic_cube, cell_area_m2
 
 
@@ -76,6 +87,37 @@ def _shrink(r: BandRange | None, adj: Adjustment) -> BandRange | None:
         return r.shift((-adj[0], -adj[1]))
     except ValueError:
         return None
+
+
+def remaining_ms(budget_ms: int, t0: float) -> int:
+    """What is left at this moment of a ``budget_ms`` deadline started at
+    ``t0`` (``time.perf_counter()``). 0 means no deadline; an exhausted
+    budget raises ``TimeseriesTimeoutError`` before any job is submitted."""
+    if budget_ms <= 0:
+        return 0
+    left = budget_ms - int((time.perf_counter() - t0) * 1000)
+    if left <= 0:
+        raise TimeseriesTimeoutError(f"processing exceeded {budget_ms} ms")
+    return left
+
+
+Selector = Callable[[DataFrame], DataFrame]
+
+
+def _selector(
+    spark: SparkSession, sel: list[tuple[int, int]], mask: DataFrame | None = None
+) -> Selector:
+    """cube → its rows in the selection ``sel``. One cell is an equality
+    predicate (pushdown, no join); more are a broadcast semi-join with
+    ``mask`` (built from ``sel`` unless given), so every slice a request
+    reads (the series, a reference interval, the uncertainty companion)
+    shares one mask."""
+    if len(sel) == 1:
+        ((r, c),) = sel
+        return lambda cube: cube.where((F.col("row") == r) & (F.col("col") == c))
+    if mask is None:
+        mask = mask_df(spark, sel)
+    return lambda cube: select_cells(cube, mask)
 
 
 def collect_with_timeout(spark: SparkSession, df: DataFrame, timeout_ms: int):
@@ -193,7 +235,7 @@ class TimeseriesService:
         self,
         req: M.TimeseriesV2Request,
         meta: DatasetMeta,
-        grid: Grid,
+        select: Selector,
         cube: DataFrame,
         base: DataFrame,
         extract: BandRange,
@@ -202,7 +244,7 @@ class TimeseriesService:
         """Transform + per-series smoothing + clip; one tagged frame per
         requested series (W1/W2/W7 + A7)."""
         transformed, post_transform = self._apply_transform(
-            req, meta, grid, cube, base, extract, requested
+            req, meta, select, cube, base, extract, requested
         )
         parts: list[DataFrame] = []
         for opt in req.requested_series_options:
@@ -232,8 +274,6 @@ class TimeseriesService:
         area_m2: float,
         t0: float,
     ) -> M.TimeseriesV2Response:
-        import time as _time
-
         series_out: list[M.SeriesResult] = []
         stats_out: list[M.SummaryStatRow] = []
 
@@ -271,62 +311,64 @@ class TimeseriesService:
             area_m2=area_m2,
             series=series_out,
             summary_stats=stats_out,
-            processing_time_ms=int((_time.perf_counter() - t0) * 1000),
+            processing_time_ms=int((time.perf_counter() - t0) * 1000),
         )
 
     def execute(self, req: M.TimeseriesV2Request) -> M.TimeseriesV2Response:
-        import time as _time
-
-        t0 = _time.perf_counter()
+        t0 = time.perf_counter()  # the request's one deadline starts here
         meta, grid, requested, extract = self._plan(req)
 
         # -- extraction: cell predicate + band pruning ----------------------
         cube = self.cube(meta, req.variable_id)
         sel = self._selection_cells(req, grid)
-        if len(sel) == 1:
-            (r, c) = sel[0]  # point: pushdown equality, no join
-            cells = cube.where((F.col("row") == r) & (F.col("col") == c))
-        else:
-            cells = select_cells(cube, mask_df(self.spark, sel))
-        n_cells, area_m2 = len(sel), self._area_m2(grid, sel)
-        cells = cells.where(F.col("band").between(extract.gte, extract.lte))
+        select = _selector(self.spark, sel)
+        cells = select(cube).where(F.col("band").between(extract.gte, extract.lte))
 
         base = (
             zonal_series(cells, req.zonal_statistic)
             .select("band", "time", "value")
             .cache()
         )
-
-        # ONE collect: the base series rides along under a sentinel name, so
-        # a request is a single Spark job (the reference's one-read model)
-        parts = self._series_parts(req, meta, grid, cube, base, extract, requested)
-        parts.append(
-            base.withColumn("series_name", F.lit("__base")).select(
-                "series_name", "band", "time", "value"
+        try:
+            # ONE collect: the base series rides along under a sentinel
+            # name, so a request is a single Spark action (the reference's
+            # one-read model). No global sort: _assemble orders each series.
+            parts = self._series_parts(
+                req, meta, select, cube, base, extract, requested
             )
+            parts.append(
+                base.withColumn("series_name", F.lit("__base")).select(
+                    "series_name", "band", "time", "value"
+                )
+            )
+            fanout = parts[0]
+            for p in parts[1:]:
+                fanout = fanout.unionByName(p)
+            all_rows = collect_with_timeout(
+                self.spark, fanout, remaining_ms(req.max_processing_time, t0)
+            )
+        finally:
+            base.unpersist()
+        base_rows = sorted(
+            (r for r in all_rows if r.series_name == "__base"), key=lambda r: r.band
         )
-        fanout = parts[0]
-        for p in parts[1:]:
-            fanout = fanout.unionByName(p)
-        all_rows = collect_with_timeout(
-            self.spark, fanout.orderBy("series_name", "band"), req.max_processing_time
-        )
-        base_rows = [r for r in all_rows if r.series_name == "__base"]
         result_rows = [r for r in all_rows if r.series_name != "__base"]
-        base.unpersist()
         resp = self._assemble(
-            req, requested, result_rows, base_rows, n_cells, area_m2, t0
+            req, requested, result_rows, base_rows, len(sel), self._area_m2(grid, sel), t0
         )
         if req.include_uncertainty:
-            resp.uncertainty = self._uncertainty_series(req, meta, grid, requested)
+            resp.uncertainty = self._uncertainty_series(
+                req, meta, select, requested, t0
+            )
         return resp
 
     def _uncertainty_series(
         self,
         req: M.TimeseriesV2Request,
         meta: DatasetMeta,
-        grid: Grid,
+        select: Selector,
         requested: BandRange,
+        t0: float,
     ) -> M.SeriesResult | None:
         """S6 — zonal series of the companion uncertainty slice over the
         same cells, clipped to the requested range (no padding: transforms
@@ -335,18 +377,17 @@ class TimeseriesService:
             ucube = self.cube(meta, req.variable_id + "_uncertainty")
         except KeyError:
             return None  # dataset has no uncertainty companion
-        ucells = self._same_cells(req, grid, ucube).where(
+        ucells = select(ucube).where(
             F.col("band").between(requested.gte, requested.lte)
         )
         rows = collect_with_timeout(
             self.spark,
-            zonal_series(ucells, req.zonal_statistic)
-            .select("band", "time", "value")
-            .orderBy("band"),
-            req.max_processing_time,
+            zonal_series(ucells, req.zonal_statistic).select("band", "time", "value"),
+            remaining_ms(req.max_processing_time, t0),
         )
         if not rows:
             return None
+        rows.sort(key=lambda r: r.band)
         return M.SeriesResult(
             name="uncertainty",
             time_range=M.TimeRangeModel(gte=rows[0].time, lte=rows[-1].time),
@@ -363,10 +404,10 @@ class TimeseriesService:
 
         Per-request transforms/smoothers still run as (tiny) window plans
         over the shared cached base, unioned into one collect per group.
+        The deadline starts at entry; a group answers within its tightest
+        member's budget.
         """
-        import time as _time
-
-        t0 = _time.perf_counter()
+        t0 = time.perf_counter()
         results: list[M.TimeseriesV2Response | None] = [None] * len(reqs)
 
         groups: dict[tuple, list[int]] = {}
@@ -380,7 +421,7 @@ class TimeseriesService:
             cube = self.cube(meta, variable_id)
 
             plans: dict[int, tuple] = {}
-            mask_rows: list[tuple[str, int, int]] = []
+            masks: dict[str, list[tuple[int, int]]] = {}
             range_rows: list[tuple[str, int, int]] = []
             for i in idxs:
                 req = reqs[i]
@@ -388,14 +429,12 @@ class TimeseriesService:
                 sel = self._selection_cells(req, grid)
                 qid = f"q{i}"
                 plans[i] = (requested, extract, sel, qid)
-                mask_rows.extend((qid, r, c) for r, c in sel)
+                masks[qid] = sel
                 range_rows.append((qid, extract.gte, extract.lte))
 
-            mask = self.spark.createDataFrame(
-                mask_rows, "query_id string, row int, col int"
-            )
-            ranges = self.spark.createDataFrame(
-                range_rows, "query_id string, bgte int, blte int"
+            mask = batch_mask_df(self.spark, masks)
+            ranges = local_frame(
+                self.spark, range_rows, "query_id string, bgte int, blte int"
             )
             # one scan: inner broadcast mask join (fan-out per membership),
             # then per-query band clipping via the broadcast ranges dim
@@ -409,28 +448,42 @@ class TimeseriesService:
                 .select("query_id", "band", "time", "value")
                 .cache()
             )
+            budget = min(
+                (reqs[i].max_processing_time for i in idxs if reqs[i].max_processing_time),
+                default=0,
+            )
+            try:
+                parts: list[DataFrame] = []
+                for i in idxs:
+                    requested, extract, sel, qid = plans[i]
+                    base_i = base_all.where(F.col("query_id") == qid).select(
+                        "band", "time", "value"
+                    )
+                    # a member's own cells are its rows of the batch mask
+                    own = (
+                        mask.where(F.col("query_id") == qid).select("row", "col")
+                        if len(sel) > 1
+                        else None
+                    )
+                    select = _selector(self.spark, sel, own)
+                    for p in self._series_parts(
+                        reqs[i], meta, select, cube, base_i, extract, requested
+                    ):
+                        parts.append(p.withColumn("query_id", F.lit(qid)))
 
-            parts: list[DataFrame] = []
-            for i in idxs:
-                req = reqs[i]
-                requested, extract, sel, qid = plans[i]
-                base_i = base_all.where(F.col("query_id") == qid).select(
-                    "band", "time", "value"
+                result_rows: list = []
+                if parts:
+                    fanout = parts[0]
+                    for p in parts[1:]:
+                        fanout = fanout.unionByName(p)
+                    result_rows = collect_with_timeout(
+                        self.spark, fanout, remaining_ms(budget, t0)
+                    )
+                base_rows_all = collect_with_timeout(
+                    self.spark, base_all, remaining_ms(budget, t0)
                 )
-                for p in self._series_parts(
-                    req, meta, grid, cube, base_i, extract, requested
-                ):
-                    parts.append(p.withColumn("query_id", F.lit(qid)))
-
-            timeout = max(reqs[i].max_processing_time for i in idxs)
-            result_rows: list = []
-            if parts:
-                fanout = parts[0]
-                for p in parts[1:]:
-                    fanout = fanout.unionByName(p)
-                result_rows = collect_with_timeout(self.spark, fanout, timeout)
-            base_rows_all = collect_with_timeout(self.spark, base_all, timeout)
-            base_all.unpersist()
+            finally:
+                base_all.unpersist()
 
             for i in idxs:
                 requested, extract, sel, qid = plans[i]
@@ -485,7 +538,7 @@ class TimeseriesService:
         self,
         req: M.TimeseriesV2Request,
         meta: DatasetMeta,
-        grid: Grid,
+        select: Selector,
         cube: DataFrame,
         base: DataFrame,
         extract: BandRange,
@@ -513,8 +566,8 @@ class TimeseriesService:
                 ref_tr, meta.time_range, meta.resolution
             )
             # second slice over the same cells (reference services.py:131-147);
-            # reuses the same cell predicate, only the band filter changes
-            ref_cells = self._same_cells(req, grid, cube).where(
+            # reuses the request's selection, only the band filter changes
+            ref_cells = select(cube).where(
                 F.col("band").between(ref_bands.gte, ref_bands.lte)
             )
             ref_series = zonal_series(ref_cells, req.zonal_statistic).select(
@@ -525,18 +578,6 @@ class TimeseriesService:
             ).select("band", "time", F.col("__z").alias("value"))
             return out, extract
         raise TypeError(f"unknown transform {type(t).__name__}")
-
-    def _same_cells(
-        self, req: M.TimeseriesV2Request, grid: Grid, cube: DataFrame
-    ) -> DataFrame:
-        area_type = req.selected_area.get("type")
-        if area_type == "Point" or (
-            area_type == "Feature"
-            and req.selected_area.get("geometry", {}).get("type") == "Point"
-        ):
-            return cube.where(point_predicate(grid, req.selected_area))
-        cells = rasterize_all_touched(grid, req.selected_area, max_cells=self.max_cells)
-        return select_cells(cube, mask_df(self.spark, cells))
 
     def _apply_smoother(self, series: DataFrame, smoother) -> DataFrame:
         if isinstance(smoother, M.NoSmoother):

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -136,3 +136,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small driver-built frame as a ``LocalRelation`` (plan:
+    ``LocalTableScan``) with exactly the DDL ``schema``.
+
+    ``spark.createDataFrame(list, schema)`` builds a Python RDD instead
+    (``Scan ExistingRDD``): every broadcast of it runs a Spark job through
+    Python workers. From an Arrow table the rows travel to the JVM once and
+    the plan holds them, so broadcasting the frame starts no job. Use this
+    for every frame the request path builds on the driver (masks, per-query
+    dimensions).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, f.type) for col, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table)

@@ -155,6 +155,47 @@ class TestMalformedPayloads422:
         )
         assert status == 422
 
+    def test_reversed_time_range_is_422(self, service):
+        status, body = H.handle_timeseries_v2(
+            service,
+            {
+                "dataset_id": "annual_5x5x5_dataset",
+                "variable_id": "float32_variable",
+                "selected_area": POINT,
+                "time_range": {"gte": "0004-01-01", "lte": "0002-01-01"},
+            },
+        )
+        assert status == 422
+        assert body["detail"][0]["loc"] == ["time_range", "lte"]
+
+    def test_one_sided_time_range_is_not_ordered(self, service):
+        """The ordering check needs both ends; an open end is filled
+        from the dataset span at planning."""
+        status, body = H.handle_timeseries_v2(
+            service,
+            {
+                "dataset_id": "annual_5x5x5_dataset",
+                "variable_id": "float32_variable",
+                "selected_area": POINT,
+                "time_range": {"lte": "0002-01-01"},
+            },
+        )
+        assert status == 200
+        assert body["series"][0]["values"] == [100.0, 200.0]
+
+    def test_reversed_v1_range_is_422(self, service):
+        status, _ = H.handle_timeseries_v1(
+            service,
+            {
+                "datasetId": "annual_5x5x5_dataset",
+                "variableName": "float32_variable",
+                "boundaryGeometry": POINT,
+                "start": "4",
+                "end": "2",
+            },
+        )
+        assert status == 422
+
     def test_transforms_plus_series_options_conflict_is_422(self, service):
         status, body = H.handle_timeseries_v2(
             service,

@@ -3,6 +3,8 @@ partition-pruned scans."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from skope_api_spark.api import models as M
@@ -49,3 +51,36 @@ class TestLakeService:
         plan = cube._jdf.queryExecution().executedPlan().toString()
         pf = plan.split("PartitionFilters")[1][:300]
         assert "dataset_id" in pf and "variable_id" in pf
+
+    def test_lake_is_resolved_once_per_service(self, spark, lake):
+        """Listing the lake and inferring its schema is a ``parquet`` job;
+        the service pays it when built, and its requests never again."""
+        svc = None
+
+        def build():
+            nonlocal svc
+            svc = lake_service(spark, lake)
+
+        assert "parquet" in _stage_names(spark, build)
+        for _ in range(2):
+            # no budget: the collect stays in the caller's job group
+            names = _stage_names(spark, lambda: svc.execute(req(max_processing_time=0)))
+            assert names and "parquet" not in names
+
+
+def _stage_names(spark, fn) -> list[str]:
+    """Call sites (``parquet``, ``collect``...) of every stage of every job
+    ``fn`` starts, found by job group through the status tracker."""
+    sc = spark.sparkContext
+    group = f"lake-test-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "lake test")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "", False)
+    tracker = sc.statusTracker()
+    return [
+        tracker.getStageInfo(s).name.split(" at ")[0]
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
