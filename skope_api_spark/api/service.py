@@ -5,19 +5,23 @@ Mirrors the reference lifecycle (SURVEY.md §3; reference
 (interval algebra) → extract (pruned scan + cell predicate) → zonal agg →
 transform → per-series smoothing → relabel/clip → summarize.
 
-Execution shape: ONE cached base-series subplan (the shared extraction,
+Execution shape: ONE base-series subplan (the shared extraction,
 reference ``timeseries.py:402-415``), per-series window expressions unioned
 with a ``series_name`` column, ONE collect under a cancellable job group
 (cooperative timeout — reference's anyio ``fail_after`` → 504 becomes
 ``TimeseriesTimeoutError``; the Spark jobs are actually cancelled, not
 orphaned). One deadline covers the whole request: the clock starts at
-entry and every collect gets what is left of the budget. The cached base
-is released however the request ends.
+entry and every collect gets what is left of the budget.
 
-Fixed per-request cost: the selection mask is a local relation
-(``geometry.mask_df``), so broadcasting it starts no job, and it is built
-once per request and shared by every slice the request reads; rows are
-collected unsorted and ordered per series on the driver.
+The request path collects through Arrow and only the rows the response
+reads: the untransformed base rides along (under the ``__base`` sentinel)
+only when a transform needs it for the "Original" summary row; the base is
+cached only when more than one unioned part reads it, and released however
+the request ends; a request whose every series clips to empty makes no
+collect. The selection mask is a local relation (``geometry.mask_df``), so
+broadcasting it starts no job, and it is built once per request and shared
+by every slice the request reads. Rows come back unsorted as one Arrow
+table, split per series and ordered by band on the driver.
 
 Known divergence from the reference (documented in SURVEY.md §2.5 W7): the
 reference hard-codes an annual PeriodIndex (``freq="A"``,
@@ -35,6 +39,9 @@ import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,7 +50,7 @@ from skope_api_spark.geometry import (
     DEFAULT_MAX_CELLS,
     Grid,
     mask_df,
-    point_predicate,
+    point_cell,
     rasterize_all_touched,
     select_cells,
 )
@@ -67,6 +74,10 @@ class TimeseriesTimeoutError(RuntimeError):
     """Request exceeded max_processing_time; Spark jobs were cancelled."""
 
 
+# series_name of the untransformed base rows that ride along in a collect
+BASE = "__base"
+
+
 def _grid(meta: DatasetMeta) -> Grid:
     return Grid(
         origin_lon=meta.origin_lon,
@@ -87,6 +98,26 @@ def _shrink(r: BandRange | None, adj: Adjustment) -> BandRange | None:
         return r.shift((-adj[0], -adj[1]))
     except ValueError:
         return None
+
+
+def _series_ranges(
+    req: M.TimeseriesV2Request, extract: BandRange, requested: BandRange
+) -> list[tuple[M.SeriesOptions, BandRange]]:
+    """Each requested series with the bands it returns: those still
+    carrying full-window values after the transform and its smoother,
+    clipped to the request. A series left with none is empty (an edge
+    request) and is not listed."""
+    post_transform = _shrink(extract, req.transform.adjustment())
+    out = []
+    for opt in req.requested_series_options:
+        bands = _shrink(post_transform, opt.smoother.adjustment())
+        if bands is None:
+            continue
+        try:
+            out.append((opt, bands.intersect(requested)))
+        except ValueError:  # disjoint
+            continue
+    return out
 
 
 def remaining_ms(budget_ms: int, t0: float) -> int:
@@ -120,15 +151,18 @@ def _selector(
     return lambda cube: select_cells(cube, mask)
 
 
-def collect_with_timeout(spark: SparkSession, df: DataFrame, timeout_ms: int):
-    """Collect under a job group; cancel the group when the budget expires.
+def collect_with_timeout(
+    spark: SparkSession, df: DataFrame, timeout_ms: int
+) -> pa.Table:
+    """Collect ``df`` as an Arrow table under a job group; cancel the group
+    when the budget expires.
 
     Cooperative cancellation (reference services.py:187-201 → 504): the JVM
     scheduler interrupts the stage tasks; nothing keeps running after the
-    deadline.
+    deadline. Arrow batches decode column-wise, with no per-row ``Row``.
     """
     if timeout_ms <= 0:
-        return df.collect()
+        return df.toArrow()
     sc = spark.sparkContext
     group = f"skope-{uuid.uuid4().hex[:8]}"
     fired = threading.Event()
@@ -141,7 +175,7 @@ def collect_with_timeout(spark: SparkSession, df: DataFrame, timeout_ms: int):
     timer = threading.Timer(timeout_ms / 1000.0, cancel)
     timer.start()
     try:
-        out = df.collect()
+        out = df.toArrow()
     except Exception as ex:  # noqa: BLE001
         if fired.is_set():
             raise TimeseriesTimeoutError(
@@ -161,12 +195,35 @@ def collect_with_timeout(spark: SparkSession, df: DataFrame, timeout_ms: int):
     return out
 
 
+def _split(table: pa.Table | None, key: str) -> dict[str, pa.Table]:
+    """``table``'s rows by ``key``, each part ordered by band."""
+    if table is None or table.num_rows == 0:
+        return {}
+    table = table.sort_by([(key, "ascending"), ("band", "ascending")])
+    keys = table.column(key)
+    change = pc.not_equal(keys[1:], keys[:-1]).to_numpy(zero_copy_only=False)
+    starts = [0, *(np.flatnonzero(change) + 1).tolist(), table.num_rows]
+    return {
+        keys[a].as_py(): table.slice(a, b - a) for a, b in zip(starts, starts[1:])
+    }
+
+
+def _series(name: str, part: pa.Table | None) -> M.SeriesResult:
+    """A returned series from its band-ordered rows."""
+    if part is None:
+        return M.SeriesResult(name=name, time_range=None, values=[])
+    times = part.column("time")
+    return M.SeriesResult(
+        name=name,
+        time_range=M.TimeRangeModel(gte=times[0].as_py(), lte=times[-1].as_py()),
+        values=part.column("value").to_pylist(),
+    )
+
+
 def _summary(values: list[float | None]) -> tuple[float | None, float | None, float | None]:
     """Driver-side summary of a returned series (reference
     timeseries.py:243-261): nan-skipping mean/median/POPULATION stddev;
     all-missing → None."""
-    import numpy as np
-
     xs = np.array([math.nan if v is None else v for v in values], dtype=float)
     if np.all(np.isnan(xs)):
         return None, None, None
@@ -219,9 +276,7 @@ class TimeseriesService:
             area_type == "Feature"
             and req.selected_area.get("geometry", {}).get("type") == "Point"
         ):
-            point_predicate(grid, req.selected_area)  # bounds validation
-            r, c = grid.cell_index(*_point_coords(req.selected_area))
-            return [(min(r, grid.rows - 1), min(c, grid.cols - 1))]
+            return [point_cell(grid, req.selected_area)]
         return rasterize_all_touched(grid, req.selected_area, max_cells=self.max_cells)
 
     @staticmethod
@@ -238,68 +293,54 @@ class TimeseriesService:
         select: Selector,
         cube: DataFrame,
         base: DataFrame,
-        extract: BandRange,
-        requested: BandRange,
+        ranges: list[tuple[M.SeriesOptions, BandRange]],
     ) -> list[DataFrame]:
         """Transform + per-series smoothing + clip; one tagged frame per
-        requested series (W1/W2/W7 + A7)."""
-        transformed, post_transform = self._apply_transform(
-            req, meta, select, cube, base, extract, requested
-        )
-        parts: list[DataFrame] = []
-        for opt in req.requested_series_options:
-            sm = self._apply_smoother(transformed, opt.smoother)
-            out_range = _shrink(post_transform, opt.smoother.adjustment())
-            if out_range is not None:
-                try:
-                    out_range = out_range.intersect(requested)
-                except ValueError:  # disjoint → empty series (edge request)
-                    out_range = None
-            if out_range is None:
-                continue
-            parts.append(
-                sm.where(F.col("band").between(out_range.gte, out_range.lte))
-                .withColumn("series_name", F.lit(opt.name))
-                .select("series_name", "band", "time", "value")
-            )
-        return parts
+        series of ``ranges`` (W1/W2/W7 + A7)."""
+        if not ranges:
+            return []
+        transformed = self._apply_transform(req, meta, select, cube, base)
+        return [
+            self._apply_smoother(transformed, opt.smoother)
+            .where(F.col("band").between(out.gte, out.lte))
+            .withColumn("series_name", F.lit(opt.name))
+            .select("series_name", "band", "time", "value")
+            for opt, out in ranges
+        ]
 
     def _assemble(
         self,
         req: M.TimeseriesV2Request,
         requested: BandRange,
-        result_rows: list,
-        base_rows: list,
+        series: dict[str, pa.Table],
         n_cells: int,
         area_m2: float,
         t0: float,
     ) -> M.TimeseriesV2Response:
+        """The response from a request's rows, split per series name."""
         series_out: list[M.SeriesResult] = []
         stats_out: list[M.SummaryStatRow] = []
 
         if not isinstance(req.transform, M.NoTransform):
             # A6 — stats of the UNtransformed series over the requested range
-            orig_vals = [
-                r.value for r in base_rows if requested.gte <= r.band <= requested.lte
-            ]
+            orig_vals: list = []
+            base = series.get(BASE)
+            if base is not None:
+                band = base.column("band")
+                keep = pc.and_(
+                    pc.greater_equal(band, requested.gte),
+                    pc.less_equal(band, requested.lte),
+                )
+                orig_vals = base.filter(keep).column("value").to_pylist()
             mean, median, stdev = _summary(orig_vals)
             stats_out.append(
                 M.SummaryStatRow(name="Original", mean=mean, median=median, stdev=stdev)
             )
 
-        by_series: dict[str, list] = {}
-        for row in result_rows:
-            by_series.setdefault(row.series_name, []).append(row)
         for opt in req.requested_series_options:
-            rows = sorted(by_series.get(opt.name, []), key=lambda r: r.band)
-            values = [r.value for r in rows]
-            tr = (
-                M.TimeRangeModel(gte=rows[0].time, lte=rows[-1].time) if rows else None
-            )
-            series_out.append(
-                M.SeriesResult(name=opt.name, time_range=tr, values=values)
-            )
-            mean, median, stdev = _summary(values)
+            out = _series(opt.name, series.get(opt.name))
+            series_out.append(out)
+            mean, median, stdev = _summary(out.values)
             stats_out.append(
                 M.SummaryStatRow(name=opt.name, mean=mean, median=median, stdev=stdev)
             )
@@ -314,6 +355,28 @@ class TimeseriesService:
             processing_time_ms=int((time.perf_counter() - t0) * 1000),
         )
 
+    def _collect_parts(
+        self, parts: list[DataFrame], base: DataFrame, budget_ms: int, t0: float
+    ) -> pa.Table | None:
+        """ONE collect of the union of ``parts`` (None when there are none:
+        the response reads no rows). ``base`` is cached only when more than
+        one part reads it, and released however the collect ends."""
+        if not parts:
+            return None
+        fanout = parts[0]
+        for p in parts[1:]:
+            fanout = fanout.unionByName(p)
+        shared = len(parts) > 1
+        if shared:
+            base.cache()
+        try:
+            return collect_with_timeout(
+                self.spark, fanout, remaining_ms(budget_ms, t0)
+            )
+        finally:
+            if shared:
+                base.unpersist()
+
     def execute(self, req: M.TimeseriesV2Request) -> M.TimeseriesV2Response:
         t0 = time.perf_counter()  # the request's one deadline starts here
         meta, grid, requested, extract = self._plan(req)
@@ -323,38 +386,23 @@ class TimeseriesService:
         sel = self._selection_cells(req, grid)
         select = _selector(self.spark, sel)
         cells = select(cube).where(F.col("band").between(extract.gte, extract.lte))
+        base = zonal_series(cells, req.zonal_statistic).select("band", "time", "value")
 
-        base = (
-            zonal_series(cells, req.zonal_statistic)
-            .select("band", "time", "value")
-            .cache()
-        )
-        try:
-            # ONE collect: the base series rides along under a sentinel
-            # name, so a request is a single Spark action (the reference's
-            # one-read model). No global sort: _assemble orders each series.
-            parts = self._series_parts(
-                req, meta, select, cube, base, extract, requested
-            )
-            parts.append(
-                base.withColumn("series_name", F.lit("__base")).select(
-                    "series_name", "band", "time", "value"
-                )
-            )
-            fanout = parts[0]
-            for p in parts[1:]:
-                fanout = fanout.unionByName(p)
-            all_rows = collect_with_timeout(
-                self.spark, fanout, remaining_ms(req.max_processing_time, t0)
-            )
-        finally:
-            base.unpersist()
-        base_rows = sorted(
-            (r for r in all_rows if r.series_name == "__base"), key=lambda r: r.band
-        )
-        result_rows = [r for r in all_rows if r.series_name != "__base"]
+        # ONE collect of the rows the response reads: the series, plus the
+        # base series under a sentinel name when a transform's "Original"
+        # stats need it. No global sort: _split orders each series.
+        ranges = _series_ranges(req, extract, requested)
+        parts = self._series_parts(req, meta, select, cube, base, ranges)
+        if not isinstance(req.transform, M.NoTransform):
+            parts.append(base.withColumn("series_name", F.lit(BASE)))
+        table = self._collect_parts(parts, base, req.max_processing_time, t0)
         resp = self._assemble(
-            req, requested, result_rows, base_rows, len(sel), self._area_m2(grid, sel), t0
+            req,
+            requested,
+            _split(table, "series_name"),
+            len(sel),
+            self._area_m2(grid, sel),
+            t0,
         )
         if req.include_uncertainty:
             resp.uncertainty = self._uncertainty_series(
@@ -380,19 +428,14 @@ class TimeseriesService:
         ucells = select(ucube).where(
             F.col("band").between(requested.gte, requested.lte)
         )
-        rows = collect_with_timeout(
+        table = collect_with_timeout(
             self.spark,
             zonal_series(ucells, req.zonal_statistic).select("band", "time", "value"),
             remaining_ms(req.max_processing_time, t0),
         )
-        if not rows:
+        if table.num_rows == 0:
             return None
-        rows.sort(key=lambda r: r.band)
-        return M.SeriesResult(
-            name="uncertainty",
-            time_range=M.TimeRangeModel(gte=rows[0].time, lte=rows[-1].time),
-            values=[r.value for r in rows],
-        )
+        return _series("uncertainty", table.sort_by("band"))
 
     def execute_many(
         self, reqs: list[M.TimeseriesV2Request]
@@ -403,9 +446,12 @@ class TimeseriesService:
         shape: thousands of requests, a handful of jobs.
 
         Per-request transforms/smoothers still run as (tiny) window plans
-        over the shared cached base, unioned into one collect per group.
-        The deadline starts at entry; a group answers within its tightest
-        member's budget.
+        over the shared base; every series that is the base itself (no
+        transform, no smoother) is read through one join for the whole
+        group. All of it is unioned into ONE collect per group; the base
+        rows ride along only for members with a transform. The rows are
+        split by query_id once. The deadline starts at entry; a group
+        answers within its tightest member's budget.
         """
         t0 = time.perf_counter()
         results: list[M.TimeseriesV2Response | None] = [None] * len(reqs)
@@ -443,60 +489,72 @@ class TimeseriesService:
                 .join(F.broadcast(ranges), "query_id")
                 .where(F.col("band").between(F.col("bgte"), F.col("blte")))
             )
-            base_all = (
-                zonal_series(tagged, stat, keys=("query_id", "band", "time"))
-                .select("query_id", "band", "time", "value")
-                .cache()
-            )
+            base_all = zonal_series(
+                tagged, stat, keys=("query_id", "band", "time")
+            ).select("query_id", "band", "time", "value")
             budget = min(
                 (reqs[i].max_processing_time for i in idxs if reqs[i].max_processing_time),
                 default=0,
             )
-            try:
-                parts: list[DataFrame] = []
-                for i in idxs:
-                    requested, extract, sel, qid = plans[i]
-                    base_i = base_all.where(F.col("query_id") == qid).select(
-                        "band", "time", "value"
-                    )
-                    # a member's own cells are its rows of the batch mask
-                    own = (
-                        mask.where(F.col("query_id") == qid).select("row", "col")
-                        if len(sel) > 1
-                        else None
-                    )
-                    select = _selector(self.spark, sel, own)
-                    for p in self._series_parts(
-                        reqs[i], meta, select, cube, base_i, extract, requested
-                    ):
-                        parts.append(p.withColumn("query_id", F.lit(qid)))
 
-                result_rows: list = []
-                if parts:
-                    fanout = parts[0]
-                    for p in parts[1:]:
-                        fanout = fanout.unionByName(p)
-                    result_rows = collect_with_timeout(
-                        self.spark, fanout, remaining_ms(budget, t0)
-                    )
-                base_rows_all = collect_with_timeout(
-                    self.spark, base_all, remaining_ms(budget, t0)
+            parts: list[DataFrame] = []
+            transformed: list[str] = []
+            plain_rows: list[tuple[str, str, int, int]] = []
+            for i in idxs:
+                req = reqs[i]
+                requested, extract, sel, qid = plans[i]
+                untransformed = isinstance(req.transform, M.NoTransform)
+                if not untransformed:
+                    transformed.append(qid)
+                windowed = []
+                for opt, bands in _series_ranges(req, extract, requested):
+                    if untransformed and isinstance(opt.smoother, M.NoSmoother):
+                        plain_rows.append((qid, opt.name, bands.gte, bands.lte))
+                    else:
+                        windowed.append((opt, bands))
+                if not windowed:
+                    continue
+                base_i = base_all.where(F.col("query_id") == qid).select(
+                    "band", "time", "value"
                 )
-            finally:
-                base_all.unpersist()
+                # a member's own cells are its rows of the batch mask
+                own = (
+                    mask.where(F.col("query_id") == qid).select("row", "col")
+                    if len(sel) > 1
+                    else None
+                )
+                select = _selector(self.spark, sel, own)
+                for p in self._series_parts(req, meta, select, cube, base_i, windowed):
+                    parts.append(p.withColumn("query_id", F.lit(qid)))
+            if plain_rows:
+                # the shared base joined to a (query_id, series_name, bands)
+                # dim: one part for every member's base-itself series
+                plain = local_frame(
+                    self.spark,
+                    plain_rows,
+                    "query_id string, series_name string, sgte int, slte int",
+                )
+                parts.append(
+                    base_all.join(F.broadcast(plain), "query_id")
+                    .where(F.col("band").between(F.col("sgte"), F.col("slte")))
+                    .drop("sgte", "slte")
+                )
+            if transformed:
+                parts.append(
+                    base_all.where(F.col("query_id").isin(transformed)).withColumn(
+                        "series_name", F.lit(BASE)
+                    )
+                )
+            by_query = _split(
+                self._collect_parts(parts, base_all, budget, t0), "query_id"
+            )
 
             for i in idxs:
                 requested, extract, sel, qid = plans[i]
-                rr = [r for r in result_rows if r.query_id == qid]
-                br = sorted(
-                    (r for r in base_rows_all if r.query_id == qid),
-                    key=lambda r: r.band,
-                )
                 results[i] = self._assemble(
                     reqs[i],
                     requested,
-                    rr,
-                    br,
+                    _split(by_query.get(qid), "series_name"),
                     len(sel),
                     self._area_m2(grid, sel),
                     t0,
@@ -541,26 +599,21 @@ class TimeseriesService:
         select: Selector,
         cube: DataFrame,
         base: DataFrame,
-        extract: BandRange,
-        requested: BandRange,
-    ) -> tuple[DataFrame, BandRange | None]:
-        """Returns (transformed series, bands with valid post-transform values)."""
+    ) -> DataFrame:
+        """The transformed series (``_series_ranges`` knows which of its
+        bands carry valid values)."""
         t = req.transform
         if isinstance(t, M.NoTransform):
-            return base, extract
+            return base
         if isinstance(t, M.ZScoreMovingInterval):
-            out = wops.rolling_zscore(
+            z = wops.rolling_zscore(
                 base, "value", order_by=("band",), width=t.width, out_col="__z"
-            ).select("band", "time", F.col("__z").alias("value"))
-            return out, _shrink(extract, t.adjustment())
-        if isinstance(t, M.ZScoreFixedInterval):
-            if t.time_range is None:
-                # scipy.zscore over the extracted interval (reference
-                # timeseries.py:163-167 applies it to the full padded slice)
-                out = wops.fixed_interval_zscore(
-                    base, "value", out_col="__z"
-                ).select("band", "time", F.col("__z").alias("value"))
-                return out, extract
+            )
+        elif isinstance(t, M.ZScoreFixedInterval) and t.time_range is None:
+            # scipy.zscore over the extracted interval (reference
+            # timeseries.py:163-167 applies it to the full padded slice)
+            z = wops.fixed_interval_zscore(base, "value", out_col="__z")
+        elif isinstance(t, M.ZScoreFixedInterval):
             ref_tr = TimeRange(t.time_range.gte, t.time_range.lte)
             ref_bands = band_range_for_time_range(
                 ref_tr, meta.time_range, meta.resolution
@@ -573,11 +626,10 @@ class TimeseriesService:
             ref_series = zonal_series(ref_cells, req.zonal_statistic).select(
                 "band", "value"
             )
-            out = wops.fixed_reference_zscore(
-                base, ref_series, "value", out_col="__z"
-            ).select("band", "time", F.col("__z").alias("value"))
-            return out, extract
-        raise TypeError(f"unknown transform {type(t).__name__}")
+            z = wops.fixed_reference_zscore(base, ref_series, "value", out_col="__z")
+        else:
+            raise TypeError(f"unknown transform {type(t).__name__}")
+        return z.select("band", "time", F.col("__z").alias("value"))
 
     def _apply_smoother(self, series: DataFrame, smoother) -> DataFrame:
         if isinstance(smoother, M.NoSmoother):
@@ -597,9 +649,3 @@ class TimeseriesService:
             ).select("band", "time", F.col("__sm").alias("value"))
         raise TypeError(f"unknown smoother {type(smoother).__name__}")
 
-
-def _point_coords(geojson: dict) -> tuple[float, float]:
-    if geojson.get("type") == "Feature":
-        geojson = geojson["geometry"]
-    lon, lat = geojson["coordinates"][:2]
-    return lon, lat

@@ -253,11 +253,12 @@ def rasterize_all_touched(
     return sorted(cells)
 
 
-def point_predicate(grid: Grid, geojson: dict):
-    """Point → (row, col) equality predicate (P5); bounds-checked (P7)."""
+def point_cell(grid: Grid, geojson: dict) -> tuple[int, int]:
+    """Point (or Point Feature) → its (row, col) cell (P5); bounds-checked
+    (P7)."""
     t = geojson.get("type")
     if t == "Feature":
-        return point_predicate(grid, geojson["geometry"])
+        return point_cell(grid, geojson["geometry"])
     if t != "Point":
         raise InvalidGeometryError(f"expected Point, got {t!r}")
     lon, lat = geojson["coordinates"][:2]
@@ -267,7 +268,12 @@ def point_predicate(grid: Grid, geojson: dict):
         )
     row, col = grid.cell_index(lon, lat)
     # points on the far edge land on the last cell (covers() is inclusive)
-    row, col = min(row, grid.rows - 1), min(col, grid.cols - 1)
+    return min(row, grid.rows - 1), min(col, grid.cols - 1)
+
+
+def point_predicate(grid: Grid, geojson: dict):
+    """Point → (row, col) equality predicate (P5); bounds-checked (P7)."""
+    row, col = point_cell(grid, geojson)
     return (F.col("row") == row) & (F.col("col") == col)
 
 

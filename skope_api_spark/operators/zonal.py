@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 ZONAL_STATS = ("mean", "median")
@@ -34,21 +34,52 @@ def zonal_series(
     """Per-band zonal statistic over the selected cells.
 
     Returns one row per key group: (*keys, value, n_cells, n_valid).
-    ``mean``/``median`` skip NULLs (masked-array parity); ``median`` is
-    exact (A2 — never percentile_approx, the oracle hash requires exact).
+    ``mean``/``median`` skip NULLs (masked-array parity). ``median`` is
+    exact (A2 — never percentile_approx, the oracle hash requires exact):
+    one ``sort_array(collect_list(value))`` in the same aggregation as the
+    counts, then the middle elements combined with Spark ``Percentile``'s
+    own interpolation (``_middle``), so it equals ``F.median`` bit for bit
+    but for the sign of a zero result (``F.median`` takes it from hash-map
+    order).
+    The per-group buffer holds at most ``n_valid`` values, which the
+    selection's ``max_cells`` bounds.
     ``n_cells`` counts all selected cells, matching the reference's
     geometry-not-nodata-aware count (``geometry.py:184``).
     """
-    if stat == "mean":
-        agg = F.avg(value_col)
-    elif stat == "median":
-        agg = F.median(value_col)
-    else:
-        raise ValueError(f"unknown zonal stat {stat!r}; expected {ZONAL_STATS}")
-    return cells.groupBy(*keys).agg(
-        agg.alias("value"),
+    counts = (
         F.count(F.lit(1)).alias("n_cells"),
         F.count(value_col).alias("n_valid"),
+    )
+    if stat == "mean":
+        return cells.groupBy(*keys).agg(F.avg(value_col).alias("value"), *counts)
+    if stat != "median":
+        raise ValueError(f"unknown zonal stat {stat!r}; expected {ZONAL_STATS}")
+    return cells.groupBy(*keys).agg(
+        F.sort_array(F.collect_list(value_col)).alias("__sorted"), *counts
+    ).select(
+        *keys,
+        _middle(F.col("__sorted"), F.col("n_valid")).alias("value"),
+        "n_cells",
+        "n_valid",
+    )
+
+
+def _middle(sorted_values: Column, n: Column) -> Column:
+    """Median of an ascending array of ``n`` non-NULL values with Spark
+    ``Percentile``'s arithmetic: ``pos = (n-1)/2``; the element at
+    ``floor(pos)`` as is when ``floor(pos) == ceil(pos)`` or both middle
+    elements are equal (NaN = NaN and -0.0 = 0.0 in SQL, which keeps NaN,
+    infinities and subnormals exact), else
+    ``(ceil(pos)-pos)*lo + (pos-floor(pos))*hi`` — not ``lo + f*(hi-lo)``,
+    which differs in the last ulp. NULL when ``n`` is 0."""
+    pos = (n - 1) * 0.5
+    lo_pos, hi_pos = F.floor(pos), F.ceil(pos)
+    lo = F.get(sorted_values, lo_pos.cast("int")).cast("double")
+    hi = F.get(sorted_values, hi_pos.cast("int")).cast("double")
+    return (
+        F.when(n == 0, F.lit(None).cast("double"))
+        .when((lo_pos == hi_pos) | (lo == hi), lo)
+        .otherwise((hi_pos - pos) * lo + (pos - lo_pos) * hi)
     )
 
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import math
 from datetime import date
 
 import numpy as np
@@ -94,6 +95,62 @@ class TestZonalGoldens:
                 if not ((r == 3 and c == 4) or (b == 3 and r == 2 and c == 4))
             ]
             assert out[b] == np.median(vals)
+
+    def test_median_equals_spark_median(self, spark):
+        """The sort-based median equals ``F.median`` (Spark ``Percentile``)
+        under ``==`` on 1200 random groups: ties, NULLs, NaN, infinities,
+        ±1e308 and the subnormal 5e-324, n_valid of 0 (all-NULL), 1, 2, 3,
+        even, odd and 700. A zero result may differ in sign only:
+        ``F.median`` keeps -0.0 and 0.0 as separate hash-map keys that
+        compare equal, so which one it returns follows hash-map order;
+        Python's ``==`` treats the two zeros as equal."""
+        import pyarrow as pa
+
+        rng = np.random.default_rng(20261017)
+        pool = [
+            0.0, -0.0, 1.0, 2.0, 2.0, -3.5, 1e308, -1e308, 5e-324, -5e-324,
+            math.nan, math.inf, -math.inf,
+        ]
+        sizes = (0, 1, 2, 3, "even", "odd", 700)
+        groups, values = [], []
+        for g in range(1200):
+            size = sizes[g % len(sizes)]
+            if size == "even":
+                size = 2 * int(rng.integers(2, 40))
+            elif size == "odd":
+                size = 2 * int(rng.integers(2, 40)) + 1
+            n_null = int(rng.integers(1, 4)) if size == 0 else int(rng.integers(0, 3))
+            vals = [
+                pool[i] if rng.random() < 0.3 else float(rng.integers(-4, 5) / 4)
+                for i in rng.integers(0, len(pool), size)
+            ]
+            vals += [None] * n_null
+            groups += [g] * len(vals)
+            values += vals
+        df = spark.createDataFrame(
+            pa.table({"g": pa.array(groups, pa.int32()), "v": pa.array(values, pa.float64())})
+        )
+        got = {
+            r.g: (r.value, r.n_valid)
+            for r in zonal_series(df, "median", keys=("g",), value_col="v").collect()
+        }
+        want = {
+            r.g: (r.m, r.n)
+            for r in df.groupBy("g")
+            .agg(F.median("v").alias("m"), F.count("v").alias("n"))
+            .collect()
+        }
+        assert len(got) == len(want) == 1200
+        assert {n for _, n in want.values()} >= {0, 1, 2, 3, 700}
+        for g, (m, n) in want.items():
+            value, n_valid = got[g]
+            assert n_valid == n
+            if m is None:
+                assert value is None and n == 0
+            elif math.isnan(m):
+                assert math.isnan(value)
+            else:
+                assert value == m, (g, value, m)
 
     def test_summary_stats_all_null_series_is_null(self, spark):
         cube = analytic_cube(spark, ANNUAL, "float32_variable")

@@ -1,6 +1,7 @@
 """The serving path's per-request lifecycle: driver-built frames are local
-relations, one deadline covers the whole request, and the cached base is
-released however the request ends."""
+relations, a request collects only the rows its response reads, one
+deadline covers the whole request, and the cached base is released however
+the request ends."""
 
 from __future__ import annotations
 
@@ -103,7 +104,7 @@ class TestLocalRelations:
         )
         service.execute_many([v2(), v2(selected_area=POINT)])
         plans = [p for _, p in collects.calls]
-        assert len(plans) == 4
+        assert len(plans) == 3
         assert not any("ExistingRDD" in p for p in plans)
         assert all(re.search(r"LocalTableScan \[row#\d+, col#\d+\]", p) for p in plans[:2])
         for dims in (r"query_id#\d+, row#\d+, col#\d+", r"query_id#\d+, bgte#\d+, blte#\d+"):
@@ -140,7 +141,7 @@ class TestOneDeadline:
         service.execute_many(
             [v2(selected_area=POINT, max_processing_time=b) for b in budgets]
         )
-        assert len(collects.calls) == 2
+        assert len(collects.calls) == 1
         assert all(0 < t <= 4_000 for t, _ in collects.calls)
 
 
@@ -180,3 +181,87 @@ class TestReleaseOnFailure:
         with pytest.raises(S.TimeseriesTimeoutError):
             service.execute_many([v2(), v2(selected_area=POINT)])
         assert self._persisted(spark) == before
+
+
+class TestOnlyTheRowsTheResponseReads:
+    def test_plain_request_has_no_base_and_no_cache(self, service, collects):
+        """One series, no transform: the collect reads the series alone, so
+        nothing is cached and no ``__base`` rows ride along."""
+        service.execute(v2())
+        ((_, plan),) = collects.calls
+        assert "InMemoryRelation" not in plan and S.BASE not in plan
+
+    def test_transform_request_keeps_base_and_cache(self, service, collects):
+        """A transform's "Original" stats read the untransformed base: it
+        rides along, and its two readers share one cached base."""
+        resp = service.execute(v2(transform={"type": "ZScoreMovingInterval", "width": 3}))
+        ((_, plan),) = collects.calls
+        assert "InMemoryRelation" in plan and S.BASE in plan
+        assert resp.summary_stats[0].name == "Original"
+        assert resp.summary_stats[0].mean is not None
+
+    def test_execute_many_is_one_collect_per_group(self, service, collects):
+        reqs = [v2(), v2(selected_area=POINT)]
+        reqs.append(v2(variable_id="uint16_variable"))  # a second group
+        reqs.append(v2(transform={"type": "ZScoreMovingInterval", "width": 3}))
+        service.execute_many(reqs)
+        assert len(collects.calls) == 2
+
+    def test_edge_request_clipped_to_empty_makes_no_collect(self, service, collects):
+        """A centered width-5 smoother needs two bands on each side: a
+        request for band 1 alone has no full window, so its series is
+        empty and nothing is collected."""
+        status, body = H.handle_timeseries_v2(
+            service,
+            {
+                "dataset_id": "annual_5x5x5_dataset",
+                "variable_id": "float32_variable",
+                "selected_area": POINT,
+                "time_range": {"gte": "0001-01-01", "lte": "0001-01-01"},
+                "requested_series_options": [
+                    {
+                        "name": "smoothed",
+                        "smoother": {
+                            "type": "MovingAverageSmoother",
+                            "method": "centered",
+                            "width": 5,
+                        },
+                    }
+                ],
+            },
+        )
+        assert status == 200, body
+        assert body["series"] == [{"name": "smoothed", "time_range": None, "values": []}]
+        assert collects.calls == []
+
+    def test_batch_of_50_points_matches_execute(self, service, collects):
+        """Every member of a 50-point batch gets the series its own
+        ``execute`` returns, from one collect; every seventh member has a
+        transform, every fifth a smoother."""
+
+        def member(i: int) -> M.TimeseriesV2Request:
+            kw: dict = {}
+            if i % 7 == 0:
+                kw["transform"] = {"type": "ZScoreMovingInterval", "width": 3}
+            if i % 5 == 0:
+                smoother = {"type": "MovingAverageSmoother", "method": "trailing", "width": 3}
+                kw["requested_series_options"] = [{"name": "ma", "smoother": smoother}]
+            return v2(
+                dataset_id="monthly_5x5x60_dataset",
+                selected_area={
+                    "type": "Point",
+                    "coordinates": [-122.5 + (i % 5), 44.5 - (i // 5 % 5)],
+                },
+                time_range={"gte": f"000{1 + i % 3}-01-01", "lte": "0005-06-01"},
+                max_processing_time=0,
+                **kw,
+            )
+
+        reqs = [member(i) for i in range(50)]
+        batch = service.execute_many(reqs)
+        assert len(collects.calls) == 1
+        for req, got in zip(reqs, batch):
+            want = service.execute(req)
+            assert got.series == want.series
+            assert got.summary_stats == want.summary_stats
+            assert got.n_cells == want.n_cells
